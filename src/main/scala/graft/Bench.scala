@@ -309,6 +309,8 @@ object Bench {
     // explicitly flushed (see the ORDER note above)
     println(MiniJson.obj(fields))
     System.out.flush()
+    graft.streaming.Drain.stopLeftovers((_, e) =>
+      System.err.println(s"[bench] stopping leftover drain query failed: $e"))
     spark.stop()
   }
 

@@ -25,13 +25,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * advances both cursors on a match), so for set inputs the result equals
   * `size(array_intersect(a, b))` exactly. Unsorted input silently
   * undercounts — keep the builder [[SetFunctions.sorted_intersect_count]]
-  * paired with sorted producers only.
+  * paired with sorted producers only. A null element the walk reads throws.
   */
 // TEMPLATE CAUTION (same as VectorExpressions): no generated line may START
 // with '|' — Spark's code-Block interpolator strips '|' margins again;
 // keep boolean operators at end of line.
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
+  import SortedIntersectCount.NullElement
 
   override def dataType: DataType = IntegerType
 
@@ -41,9 +42,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   // fail at ANALYSIS time instead (r21 advice). Element NULLABILITY is
   // deliberately not rejected: a parquet round-trip of a null-free
   // array<long> column reads back with containsNull=true (a legitimate
-  // production shape), so the null-free half of the contract — like
-  // sortedness — stays a documented data property the producers
-  // (sort_array(collect_set(<long>))) guarantee.
+  // production shape), so nulls are caught per element at run time by a
+  // null-bitmap test before each read.
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType): Boolean = dt match {
       case ArrayType(LongType, _) => true
@@ -68,6 +68,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     var j = 0
     var c = 0
     while (i < nx && j < ny) {
+      if (x.isNullAt(i) || y.isNullAt(j))
+        throw new IllegalArgumentException(NullElement)
       val xv = x.getLong(i)
       val yv = y.getLong(j)
       if (xv < yv) i += 1
@@ -91,6 +93,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
          |int $ny = $y.numElements();
          |int $i = 0, $j = 0, $c = 0;
          |while ($i < $nx && $j < $ny) {
+         |  if ($x.isNullAt($i) || $y.isNullAt($j)) throw new IllegalArgumentException("$NullElement");
          |  long $xv = $x.getLong($i);
          |  long $yv = $y.getLong($j);
          |  if ($xv < $yv) { $i++; }
@@ -104,6 +107,10 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+  val NullElement = "sorted_intersect_count: null array element; inputs must be null-free sets"
 }
 
 object SetFunctions {

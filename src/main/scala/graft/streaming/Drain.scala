@@ -14,14 +14,15 @@ object Drain {
     * root session's `spark.streams.active` cannot see, so a teardown sweep
     * on the root session alone misses any drain query still running (r21
     * advice). Weak references: a terminated query's entry must not pin the
-    * query (and its session) for the JVM lifetime. */
-  private val tracked =
+    * query (and its session) for the JVM lifetime, and cleared or
+    * terminated entries are dropped on every add. */
+  private[graft] val tracked =
     new java.util.concurrent.ConcurrentLinkedQueue[
       java.lang.ref.WeakReference[StreamingQuery]]()
 
   /** Stop every tracked query that is still active — the explicit-teardown
-    * sweep Verify runs before `spark.stop()` so state-store/native teardown
-    * happens on a fully alive JVM. Also prunes dead/terminated entries. */
+    * sweep Verify and Bench run before `spark.stop()` so state-store/native
+    * teardown happens on a fully alive JVM. Also prunes dead/terminated entries. */
   def stopLeftovers(onError: (StreamingQuery, Throwable) => Unit =
       (_, _) => ()): Unit = {
     val it = tracked.iterator()
@@ -39,6 +40,7 @@ object Drain {
   /** Await `q` up to `timeoutMs`; on timeout stop the query and throw. */
   def awaitOrFail(q: StreamingQuery, what: String,
       timeoutMs: Long = 300000L): Unit = {
+    tracked.removeIf { r => val t = r.get(); t == null || !t.isActive }
     // registered BEFORE the wait: a drain that times out (or whose stop()
     // fails) leaves its query findable by the teardown sweep even though
     // it lives on a child session invisible to the root session's manager

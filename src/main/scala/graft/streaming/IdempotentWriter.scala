@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.col
 
 import graft.operators.Joins
 
@@ -14,9 +15,9 @@ import graft.operators.Joins
   * checkpointed source offsets this yields effectively-once rows even when a
   * batch replays after failure.
   *
-  * Scale note: the anti-join reads back only the key columns (column-pruned
-  * scan); with a partitioned sink, partition filters keep the read-back
-  * bounded by the batch's key range rather than the full history.
+  * Scale note: the anti-join reads back every key in the sink on every
+  * batch. The scan is column-pruned to the key columns and skips schema
+  * inference, but its size still grows with the sink's history.
   */
 object IdempotentWriter {
 
@@ -71,14 +72,17 @@ object IdempotentWriter {
     false
   }
 
-  /** foreachBatch body: append only rows whose `keys` aren't in the sink. */
+  /** foreachBatch body: append only rows whose `keys` aren't in the sink.
+    * The key read-back takes its schema from the batch (no per-batch schema
+    * inference); a sink key type that cannot be read as it fails the batch. */
   def appendNew(sinkPath: String, keys: Seq[String])(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val deduped = batch.dropDuplicates(keys)
     val fresh =
-      if (sinkHasData(spark, sinkPath))
-        Joins.antiJoinNew(deduped, spark.read.parquet(sinkPath), keys)
-      else deduped
+      if (sinkHasData(spark, sinkPath)) {
+        val keySchema = deduped.select(keys.map(col): _*).schema
+        Joins.antiJoinNew(deduped, spark.read.schema(keySchema).parquet(sinkPath), keys)
+      } else deduped
     fresh.write.mode(SaveMode.Append).parquet(sinkPath)
   }
 }

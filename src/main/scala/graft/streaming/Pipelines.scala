@@ -7,14 +7,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.sources.KafkaJson
 
 /** The two ingestion pipelines (SURVEY.md §3.2/§3.3) as Structured Streaming
-  * flows: source -> explicit-schema decode -> validity guard -> bounded dedup
-  * -> idempotent sink. Sources are plain DataFrames so the same transform runs
-  * on a Kafka stream, a file-replay stream (tests, zero-egress env) or a
-  * MemoryStream.
+  * flows: source -> explicit-schema decode -> validity guard -> idempotent
+  * sink. Sources are plain DataFrames so the same transform runs on a Kafka
+  * stream, a file-replay stream (tests, zero-egress env) or a MemoryStream.
+  * Micro-batches are stateless: exactly-once effect comes from the replayable
+  * source plus the idempotent sink, as in the reference (INSERT IGNORE).
   *
   * Streaming semantics mapping (SURVEY.md §2.10):
   *   T1 at-least-once + post-commit offsets  -> checkpoint + IdempotentWriter
-  *   T4 producer high-watermark              -> dropDuplicatesWithinWatermark
+  *   T4 producer high-watermark              -> IdempotentWriter in-batch dedup + sink anti-join
   *   T5 polling cadence                      -> Trigger.ProcessingTime
   *   T6 bounded drain (poll max_records)     -> Trigger.AvailableNow
   *   T7 Airflow run-to-completion cycle      -> availableNow batch-drain mode
@@ -34,46 +35,23 @@ object Pipelines {
       .option("startingOffsets", "earliest")
       .load()
 
-  /** Decode + guard + dedup for the price stream. Input: raw frame with a
-    * `value` column. Output: typed klines, malformed messages dropped, in-
-    * stream duplicate suppression bounded by the watermark (the unbounded
-    * key space makes watermarked state mandatory at scale — the sink-side
-    * anti-join in [[IdempotentWriter]] is the replay backstop).
+  /** Decode + guard for the price stream. Input: raw frame with a `value`
+    * column. Output: typed klines, malformed messages dropped. No dedup:
+    * [[start]] dedups through [[IdempotentWriter]]; a caller writing the
+    * flow anywhere else must dedup on [[klineKeys]] itself.
     */
-  def priceFlow(raw: DataFrame, watermark: String = "10 minutes"): DataFrame =
+  def priceFlow(raw: DataFrame): DataFrame =
     KafkaJson.parsePrices(raw)
       .filter(col("symbol").isNotNull && col("open_time").isNotNull)
-      // INGEST-time watermark, same posture as newsFlow (round-13 fix):
-      // klines BACKFILL — adding a symbol replays its history (the
-      // limit=1000 sweep in Ingest), and an event-time watermark on
-      // open_time silently DROPPED every row older than the stream's
-      // horizon before it reached the sink; the IdempotentWriter backstop
-      // never even saw them. Ingest time is monotone, so nothing is ever
-      // late, while the dedup state still expires after the horizon.
-      .withColumn("_ingest_t", current_timestamp())
-      .withWatermark("_ingest_t", watermark)
-      .dropDuplicatesWithinWatermark("symbol", "interval", "open_time")
-      .drop("_ingest_t")
 
-  /** Decode + guard + dedup for the news stream: URL whitelist
-    * (producer_news.py:29-36) then URL dedup (sent_urls set + consumer
-    * existence check collapse into one dedup + the sink anti-join).
+  /** Decode + URL whitelist (producer_news.py:29-36) for the news stream.
+    * No dedup: the reference's sent_urls set and consumer existence check
+    * collapse into [[IdempotentWriter]] behind [[start]]; a caller writing
+    * the flow anywhere else must dedup on [[newsKeys]] itself.
     */
-  def newsFlow(raw: DataFrame, watermark: String = "1 hour"): DataFrame =
+  def newsFlow(raw: DataFrame): DataFrame =
     KafkaJson.parseNews(raw)
       .filter(col("url").isNotNull && KafkaJson.validNewsUrl(col("url")))
-      // Watermarked dedup keeps state bounded in continuous mode (same
-      // posture as priceFlow) — but the watermark rides on INGEST time, not
-      // created_date: article publish dates are arbitrarily old (RSS
-      // backfills), and an event-time watermark would silently DROP a
-      // never-before-seen old article as late data. Ingest time is
-      // monotonic, so nothing is ever late; state still expires after the
-      // horizon. The IdempotentWriter anti-join stays the cross-batch
-      // backstop for URLs recrawled beyond it.
-      .withColumn("_ingest_t", current_timestamp())
-      .withWatermark("_ingest_t", watermark)
-      .dropDuplicatesWithinWatermark("url")
-      .drop("_ingest_t")
 
   val klineKeys: Seq[String] = Seq("symbol", "interval", "open_time")
   val newsKeys: Seq[String] = Seq("url")
@@ -103,7 +81,8 @@ object Pipelines {
       .drop(n("symbol"))
   }
 
-  /** Start a pipeline into an idempotent parquet sink. `availableNow = true`
+  /** Start a pipeline into an idempotent parquet sink: every micro-batch goes
+    * through [[IdempotentWriter.appendNew]] on `keys`. `availableNow = true`
     * is the Airflow-style run-to-completion drain (T6/T7); false runs
     * continuously at `cadence` (T5; 10s prices / 30s news in the reference).
     */

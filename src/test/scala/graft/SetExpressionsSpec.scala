@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
 import graft.functions.SetFunctions
 
@@ -76,5 +78,38 @@ class SetExpressionsSpec extends SparkTestBase {
       .select(SetFunctions.sorted_intersect_count(col("a"), col("b")))
       .collect().head.getInt(0)
     assert(got == 1)
+  }
+
+  test("a null array element fails loudly on both the interpreted and the " +
+      "codegen path (getLong on a null slot reads undefined data)") {
+    // through parquet so CODEGEN_ONLY really compiles the walk (a local Seq
+    // folds to an interpreted LocalRelation at optimization time)
+    val dir = graft.util.TempDirs.create("graft-sic-nullelem").toString
+    spark.createDataFrame(java.util.Arrays.asList(
+        Row(1L, Seq(1L, 2L, 3L), Seq(2L, 3L)),
+        Row(2L, Seq(1L, 2L, 3L), Seq[Any](2L, null)),
+        Row(3L, Seq[Any](null, 5L), Seq(1L, 5L))),
+      new StructType().add("id", "bigint")
+        .add("a", ArrayType(LongType, containsNull = true))
+        .add("b", ArrayType(LongType, containsNull = true)))
+      .write.mode("overwrite").parquet(dir)
+    for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY")) {
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.codegen.factoryMode", mode)
+      s2.conf.set("spark.sql.codegen.fallback", "false")
+      s2.conf.set("spark.sql.codegen.wholeStage", (mode == "CODEGEN_ONLY").toString)
+      def sic(id: Long) = s2.read.parquet(dir).filter(col("id") === id)
+        .select(SetFunctions.sorted_intersect_count(col("a"), col("b")))
+        .collect().map(_.getInt(0)).toSeq
+      assert(sic(1L) == Seq(2), s"$mode: clean row")
+      for (id <- Seq(2L, 3L)) { // null on the right side, then on the left
+        val e = intercept[Exception](sic(id))
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+        assert(msgs.exists(_.contains(
+          graft.functions.SortedIntersectCount.NullElement)),
+          s"$mode row $id: unexpected failure $e")
+      }
+    }
   }
 }

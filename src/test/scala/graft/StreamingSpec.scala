@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -38,11 +39,10 @@ class StreamingSpec extends SparkTestBase {
 
   test("round-13: a backfilled kline with an arbitrarily old open_time " +
       "still lands (the event-time watermark dropped history replays)") {
-    // the dedup watermark rides on ingest time, not open_time — adding a
-    // symbol replays its history, whose open_times sit far behind the
-    // stream's horizon; under the old open_time watermark these rows were
-    // silently dropped before the sink (and its anti-join backstop) ever
-    // saw them
+    // the flow carries no watermark at all — adding a symbol replays its
+    // history, whose open_times sit far behind the stream's horizon; under
+    // the old open_time watermark these rows were silently dropped before
+    // the sink (and its anti-join) ever saw them
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
     val flow = Pipelines.priceFlow(mem.toDF())
@@ -58,6 +58,141 @@ class StreamingSpec extends SparkTestBase {
     val out = spark.read.parquet(sink)
     assert(out.filter($"symbol" === "SOLUSDT").count() == 1,
       "backfilled 2020 kline was dropped as late data")
+  }
+
+  /** Lands each file's lines as one text file, mtimes ascending, so a
+    * `maxFilesPerTrigger=1` drain reads them one micro-batch each. */
+  private def land(dir: String, files: Seq[Seq[String]]): Unit =
+    files.zipWithIndex.foreach { case (lines, i) =>
+      val f = java.nio.file.Paths.get(dir, f"part-$i%05d.json")
+      Files.createDirectories(f.getParent)
+      Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      assert(f.toFile.setLastModified(1700000000000L + i * 1000L))
+    }
+
+  /** Drains `dir` through `flow` into the sink from `checkpoint`, one file
+    * per micro-batch; returns the query's progress log. */
+  private def drainFiles(flow: DataFrame => DataFrame, dir: String, sink: String,
+      checkpoint: String, keys: Seq[String]) = {
+    val raw = spark.readStream.option("maxFilesPerTrigger", "1").text(dir)
+    val q = Pipelines.start(flow(raw), sink, checkpoint, keys)
+    assert(q.awaitTermination(120000), s"drain of $dir did not finish")
+    assert(q.exception.isEmpty, s"drain failed: ${q.exception}")
+    // stateless micro-batches: no operator keeps a state store
+    assert(q.lastProgress != null && q.lastProgress.stateOperators.isEmpty,
+      s"state operators left in the flow: ${q.lastProgress}")
+    assert(q.recentProgress.forall(_.stateOperators.isEmpty))
+    q.recentProgress.toSeq
+  }
+
+  /** Asserts the sink holds exactly `expected` keys once each, and that a
+    * replay of the last two landed files from a fresh checkpoint appends
+    * nothing. */
+  private def assertSinkDedup(flow: DataFrame => DataFrame, files: Seq[Seq[String]],
+      keys: Seq[String], key: Column, expected: Set[String]): Unit = {
+    val root = tmp("graft-sinkdedup")
+    land(root + "/landing", files)
+    val sink = root + "/sink"
+    val batches = drainFiles(flow, root + "/landing", sink, root + "/ckpt", keys)
+    assert(batches.count(_.numInputRows > 0) == files.size,
+      "each landed file must be its own micro-batch")
+    def sinkKeys() = spark.read.parquet(sink).select(key.cast("string"))
+      .as[String].collect().toSeq
+    assert(sinkKeys().sorted == expected.toSeq.sorted)
+    land(root + "/replay", files.takeRight(2))
+    val replayed = drainFiles(flow, root + "/replay", sink, root + "/ckpt-replay", keys)
+    assert(replayed.map(_.numInputRows).sum == files.takeRight(2).map(_.size).sum)
+    assert(sinkKeys().sorted == expected.toSeq.sorted, "replay appended rows")
+  }
+
+  private def kline(sym: String, openMs: Long) =
+    s"""{"symbol":"$sym","interval":"1h","open_time":$openMs,"open":"1.0","high":"1.1","low":"0.9","close":"1.05","volume":"10.0","close_time":${openMs + 3599999L},"fetched_at":"2024-01-01T01:00:05"}"""
+
+  private def article(url: String) =
+    s"""{"title":"t","url":"$url","created_date":"2024-01-01 12:00:00+00:00","tag":null,"content":"c","sentiment_score":0.1}"""
+
+  test("stateless priceFlow: the sink alone dedups within a file, across " +
+      "micro-batches and on replay, and drops malformed lines") {
+    val h = 3600000L
+    val t0 = 1704067200000L
+    val files = Seq(
+      Seq(kline("BTCUSDT", t0), kline("ETHUSDT", t0), kline("BTCUSDT", t0), "not json"),
+      Seq(kline("BTCUSDT", t0 + h), kline("SOLUSDT", t0),
+        """{"symbol":null,"interval":"1h","open_time":1704067200000}"""),
+      Seq(kline("SOLUSDT", t0), kline("ETHUSDT", t0 + h), "{broken"))
+    val expected = Seq("BTCUSDT" -> t0, "ETHUSDT" -> t0, "BTCUSDT" -> (t0 + h),
+      "SOLUSDT" -> t0, "ETHUSDT" -> (t0 + h))
+      .map { case (sym, ms) => s"$sym|1h|${ms / 1000}" }.toSet
+    assertSinkDedup(Pipelines.priceFlow, files, Pipelines.klineKeys,
+      concat_ws("|", $"symbol", $"interval", unix_seconds($"open_time").cast("string")),
+      expected)
+  }
+
+  test("stateless newsFlow: the sink alone dedups URLs within a file, " +
+      "across micro-batches and on replay, and drops bad lines") {
+    val a = "https://www.coindesk.com/markets-a"
+    val b = "https://www.newsbtc.com/analysis/b"
+    val c = "https://www.coindesk.com/policy-c"
+    val files = Seq(
+      Seq(article(a), article(b), article(a), "not json"),
+      Seq(article(c), article("https://evil.example.com/x")),
+      Seq(article(c), article(b), """{"title":"no url"}"""))
+    assertSinkDedup(Pipelines.newsFlow, files, Pipelines.newsKeys, $"url", Set(a, b, c))
+  }
+
+  test("IdempotentWriter key read-back: non-key sink columns in another " +
+      "order do not matter") {
+    val sink = tmp("graft-keyorder") + "/out"
+    Seq(("x", "n1", 1), ("y", "n2", 2)).toDF("v", "note", "id").write.parquet(sink)
+    IdempotentWriter.appendNew(sink, Seq("id"))(Seq((2, "b"), (3, "c")).toDF("id", "v"), 0L)
+    val ids = spark.read.schema("id INT").parquet(sink).as[Int].collect().toSeq
+    assert(ids.sorted == Seq(1, 2, 3))
+  }
+
+  test("IdempotentWriter key read-back: a key named in another case " +
+      "resolves under spark.sql.caseSensitive=false") {
+    assert(!spark.conf.get("spark.sql.caseSensitive").toBoolean)
+    val sink = tmp("graft-keycase") + "/out"
+    val batch = Seq((1, "a"), (2, "b")).toDF("id", "v")
+    IdempotentWriter.appendNew(sink, Seq("ID"))(batch, 0L)
+    IdempotentWriter.appendNew(sink, Seq("ID"))(batch, 0L) // replay
+    IdempotentWriter.appendNew(sink, Seq("Id"))(Seq((2, "b"), (3, "c")).toDF("id", "v"), 1L)
+    val ids = spark.read.parquet(sink).select("id").as[Int].collect().toSeq
+    assert(ids.sorted == Seq(1, 2, 3))
+  }
+
+  test("IdempotentWriter key read-back: a sink key of an incompatible type " +
+      "fails the batch and appends nothing") {
+    val sink = tmp("graft-keytype") + "/out"
+    Seq(("1", "a"), ("2", "b")).toDF("id", "v").write.parquet(sink)
+    val filesBefore = new java.io.File(sink).list().sorted.toSeq
+    intercept[Exception] {
+      IdempotentWriter.appendNew(sink, Seq("id"))(Seq((2, "b"), (3, "c")).toDF("id", "v"), 0L)
+    }
+    assert(new java.io.File(sink).list().sorted.toSeq == filesBefore)
+    assert(spark.read.parquet(sink).count() == 2)
+  }
+
+  test("Drain registry drops terminated queries on each add and is empty " +
+      "after a sweep") {
+    import scala.jdk.CollectionConverters._
+    import graft.streaming.Drain
+    val src = tmp("graft-drainreg")
+    Seq("a", "b").toDF("value").write.text(src + "/in")
+    def drain() = {
+      val q = spark.readStream.schema("value STRING").text(src + "/in")
+        .writeStream.format("noop")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      Drain.awaitOrFail(q, "registry")
+      q
+    }
+    val first = Seq(drain(), drain())
+    drain()
+    val live = Drain.tracked.asScala.flatMap(r => Option(r.get())).toSeq
+    assert(first.forall(q => !live.exists(_ eq q)),
+      "terminated drains were kept past the next add")
+    Drain.stopLeftovers()
+    assert(Drain.tracked.isEmpty)
   }
 
   test("IdempotentWriter: replayed micro-batch appends nothing (T1 effectively-once)") {
@@ -138,9 +273,9 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("news flow: a NEW article with an arbitrarily old created_date still lands") {
-    // the dedup watermark rides on ingest time, not created_date — an
-    // event-time watermark would drop an old-dated backfill article as
-    // late data before the sink ever saw it
+    // the flow carries no watermark at all — an event-time watermark on
+    // created_date would drop an old-dated backfill article as late data
+    // before the sink ever saw it
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
     val flow = Pipelines.newsFlow(mem.toDF())
