@@ -94,10 +94,13 @@ object Indicators {
     * separately-projected branches, but evaluates the window once. The null
     * filter drops RSI ÷0 rows and single-row-stddev Bollinger rows exactly as
     * the reference's `filter(value IS NOT NULL)` does (spark_job_1.py:54).
+    * `carry` names extra input columns repeated on each of a row's four
+    * output rows (between the order columns and type_name).
     */
-  def allLong(df: DataFrame, spec: SeriesSpec, k: Double = 2.0): DataFrame = {
+  def allLong(df: DataFrame, spec: SeriesSpec, k: Double = 2.0,
+      carry: Seq[String] = Nil): DataFrame = {
     val wide = all(df, spec, k)
-    val keep = (spec.partitionCols ++ spec.orderCols).distinct.map(col)
+    val keep = (spec.partitionCols ++ spec.orderCols ++ carry).distinct.map(col)
     val unpivoted = wide.select(keep :+ expr(
       "stack(4, 'SMA', sma, 'RSI', rsi, 'BB_UP', bb_up, 'BB_DOWN', bb_down) AS (type_name, value)"
     ): _*)

@@ -48,6 +48,58 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("indicator job incremental run: ONE exchange on the series, ONE sort, " +
+      "the sink anti-join folded in (no sort-merge join)") {
+    import spark.implicits._
+    val dir = graft.util.TempDirs.create("graft-plan-ind").toString
+    val (fact, sink) = (s"$dir/kline_fact", s"$dir/indicator_fact")
+    val typeDim = graft.model.Schemas.indicatorTypeSeed.toDF("type_id", "type_name")
+    def land(hours: Range): Unit = hours.map(h => (1 + h % 2, 1,
+      java.sql.Timestamp.valueOf(f"2024-01-01 ${h / 2}%02d:00:00"), 100.0 + h % 7))
+      .toDF("symbol_id", "interval_id", "close_time", "close_price")
+      .write.mode("append").parquet(fact)
+    land(0 until 40)
+    graft.pipeline.IndicatorJob.run(spark, fact, sink, typeDim)
+    land(40 until 44)
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    // both actions read the persisted frame; its plan is the job's plan. The
+    // incremental one is the plan with the (klines ∪ sink keys) union: events
+    // of the cold run may still be queued when the listener registers
+    import scala.jdk.CollectionConverters._
+    def incremental = plans.asScala.flatMap(_.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s.relation.cachedPlan
+    }).filter(_.exists(_.isInstanceOf[org.apache.spark.sql.execution.UnionExec]))
+    spark.listenerManager.register(listener)
+    try {
+      withStaticPlans(assert(graft.pipeline.IndicatorJob.run(spark, fact, sink, typeDim) > 0))
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (incremental.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+
+    assert(incremental.nonEmpty, s"no incremental plan among ${plans.size} captured")
+    val plan = incremental.head
+    val shuffles = plan.collect { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size == 1, s"expected 1 shuffle, got ${shuffles.size}:\n$plan")
+    val keys = shuffles.head.outputPartitioning match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        h.expressions.collect { case a: org.apache.spark.sql.catalyst.expressions.Attribute => a.name }
+      case other => Seq(other.toString)
+    }
+    assert(keys == Seq("symbol_id", "interval_id"), s"shuffle keys: $keys")
+    assert(plan.collect { case s: org.apache.spark.sql.execution.SortExec => s }.size == 1,
+      s"expected 1 sort:\n$plan")
+    assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty, s"sort-merge join:\n$plan")
+    assert(plan.collect { case j: BroadcastHashJoinExec => j }.size == 1, s"dim join:\n$plan")
+  }
+
   test("dim join chain: broadcast hash joins, zero sort-merge joins") {
     withStaticPlans {
       val plan = planOf(CoreQueries.dimJoinAgg(spark, sf))
